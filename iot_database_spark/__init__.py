@@ -19,7 +19,7 @@ Layout:
     functions/        BsonExpression scalar dialect -> Column registry,
                       IotValue priority-array expressions, unit conversion
     operators/        timeseries (LOCF/resample), blockchain, vector search,
-                      dedup, text analysis, similarity, multimodal plumbing
+                      dedup, text analysis, similarity, RTSP frame store
     sources/          csv/json/parquet sources & sinks, system collections
     streaming/        continuous query service (Structured Streaming)
     plans/            explain/plan-audit helpers

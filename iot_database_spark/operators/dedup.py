@@ -131,24 +131,6 @@ def shingles(text: Column, n: int = 3) -> Column:
     return let(F.split(text, " "), build)
 
 
-def minhash_signature(text: Column, k: int = 16, n: int = 3) -> Column:
-    """k seeded min-hashes over the shingle set — an array<bigint> column.
-    Entirely per-row: transform(seeds, s -> array_min(transform(shingles,
-    sh -> hash64(seed#sh))))."""
-    # hash each shingle ONCE, then derive the k permutations by XOR with
-    # fixed constants (16x less md5 work than per-seed hashing; XOR with
-    # a constant is a bijection, so the min-wise property holds)
-    hashes = F.transform(shingles(text, n), lambda s: hash64(s))
-
-    def min_hash(seed: int) -> Column:
-        # NB: the seed must be captured by closure, not as a lambda
-        # default — PySpark binds every lambda parameter (including
-        # defaulted ones) to higher-order-function variables
-        return F.array_min(F.transform(hashes, lambda h: xor_permute(h, seed)))
-
-    return F.array(*[min_hash(seed) for seed in range(k)])
-
-
 def _explode_pairs(grouped: DataFrame, member_col: str, build) -> DataFrame:
     """All i<j member pairs of each group's `member_col` array, exploded.
 

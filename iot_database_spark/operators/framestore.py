@@ -35,12 +35,10 @@ when consecutive frames change size — this encoder writes a full frame
 on any size change instead, which the reference reader replays
 correctly.
 
-Spark wiring: `frame_sample(pixels=True)` in operators/multimodal.py
-recognizes the format structurally (`sniff`) and replays it inside the
-same Arrow-batched mapInPandas stage as the other containers; each
-reconstructed frame that is itself a JPEG continues into the in-process
-entropy decoder. The codec is per-row compute — no shuffle, constant
-memory per video blob.
+Standalone API: no registered query or Spark stage calls the codec.
+Decoding the frames themselves (JPEG, H.264, ...) is out of scope; this
+module stores and replays the reference's byte records only, with
+constant memory per video blob.
 """
 
 from __future__ import annotations
@@ -152,8 +150,8 @@ def decode_frames(data: bytes) -> Iterator[bytes]:
     record structure preserves).
 
     A GENERATOR, not a list (r6 advice): replay state is only the
-    previous frame, so a consumer that subsamples (frame_sample's
-    every_n) never holds more than one decoded frame of a long
+    previous frame, so a consumer that subsamples (keeps every
+    n-th frame) never holds more than one decoded frame of a long
     sparse-delta capture — decoded size can vastly exceed blob size,
     and materializing it would contradict the constant-memory claim.
     Structural errors raise lazily at iteration, like any generator —

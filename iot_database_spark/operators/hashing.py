@@ -7,7 +7,7 @@ hex chars of md5 (60 bits, fits BIGINT):
     Spark : conv(substring(md5(x), 1, 15), 16, 10)::bigint
     DuckDB: ('0x' || substring(md5(x), 1, 15))::BIGINT
 
-Verified identical on both engines. Seeded variants prepend '<seed>#'.
+Verified identical on both engines.
 """
 
 from __future__ import annotations
@@ -20,17 +20,9 @@ def hash64(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
-def seeded_hash64(col: Column, seed: int) -> Column:
-    return hash64(F.concat(F.lit(f"{seed}#"), col))
-
-
 def duck_hash64(expr: str) -> str:
     """DuckDB SQL text computing the same hash for oracle queries."""
     return f"CAST(('0x' || substring(md5({expr}), 1, 15)) AS BIGINT)"
-
-
-def duck_seeded_hash64(expr: str, seed: int) -> str:
-    return duck_hash64(f"concat('{seed}#', {expr})")
 
 
 # Fixed XOR constants — a cheap universal permutation family for MinHash:

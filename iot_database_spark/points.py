@@ -222,12 +222,7 @@ class PointStore:
         # bound to a per-batch session clone) must not carry an
         # Observation — it would never complete (Table._observable's
         # hang class, r13) — so they pin first and census separately.
-        same_session = False
-        try:
-            same_session = batch.sparkSession is self.db.spark
-        except Exception:
-            pass
-        if same_session:
+        if self.writes._observable(batch):
             obs = Observation()
             hashed = hashed.observe(obs, *census_cols).localCheckpoint(
                 eager=True

@@ -377,18 +377,6 @@ def _compile_comparison(text: str, df: DataFrame) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def _project(df: DataFrame, cols: list[tuple[str, str]]) -> DataFrame:
-    if not cols:
-        return df
-    sel = []
-    for name, alias in cols:
-        matches = [c for c in df.columns if c.lower() == name.lower()]
-        if not matches:
-            raise ValueError(f"unknown column {name!r}")
-        sel.append(F.col(matches[0]).alias(alias))
-    return df.select(*sel)
-
-
 def _parse_on(on: str) -> tuple[str, str, str, str]:
     """'t2.fk = t1.id' -> (t2, fk, t1, id)"""
     m = re.match(r"(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)$", on.strip())

@@ -57,8 +57,7 @@ def register(
 # its evidence hits the 3-round age limit this round, exactly the
 # deferral arithmetic the r13 registry comments predicted), then the 49
 # oldest r11 greens. No registration change this round (optimization
-# round: semantics and registry frozen; the staged r14 candidate in
-# operators/staged_r14.py stays staged).
+# round: semantics and registry frozen).
 # SATURATION: at 150 registered queries, a 50-slot window, and the
 # 3-round evidence-age limit, the rotation is exactly full with ZERO
 # slack. Steady state: r15 = the remaining r11 green + the r12 greens.
@@ -164,10 +163,7 @@ def _ensure_loaded() -> None:
         "iot_database_spark.operators.streaming_queries",
         "iot_database_spark.operators.storage_queries",
     ):
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError:
-            pass  # module not built yet (incremental rounds)
+        importlib.import_module(mod)
     _LOADED = True
 
 

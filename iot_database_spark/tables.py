@@ -40,13 +40,16 @@ from __future__ import annotations
 
 import glob
 import json
+import math
 import os
 import shutil
 import uuid
 from dataclasses import dataclass
+from functools import cache
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, _parse_datatype_string
 
 
 @dataclass
@@ -81,6 +84,13 @@ class ConstraintViolation(Exception):
     pass
 
 
+@cache
+def _ddl_fields(ddl: str) -> tuple[StructField, ...]:
+    """The fields of a DDL schema string, parsed once per string — no
+    DataFrame (and so no JVM plan) is built to read them."""
+    return tuple(_parse_datatype_string(ddl).fields)
+
+
 # -- driver-local batch construction ------------------------------------
 # createDataFrame(list) parallelizes the rows over defaultParallelism
 # slices (pyspark _createFromLocal passes no numSlices), so an 8-row
@@ -99,19 +109,22 @@ class ConstraintViolation(Exception):
 # The safe set is deliberately narrow: plain scalars whose
 # pandas/Arrow round trip is value-identical to the classic verified
 # path (None -> null in every column type). datetime (tz semantics),
-# bytes, Decimal, arrays/maps, numpy scalars, and NaN floats (Arrow's
+# bytes, Decimal, arrays/maps, numpy scalars, NaN floats (Arrow's
 # pandas semantics would fold NaN to null where the classic path keeps
-# NaN) all take the classic path unchanged.
+# NaN) and ints of magnitude >= 2**53 (pandas holds an int column that
+# also has a None as float64, which rounds them) all take the classic
+# path unchanged.
 _LOCAL_SAFE_TYPES = (str, int, float, bool, type(None))
 _LOCAL_MAX_ROWS = 100_000
+_FLOAT64_EXACT_INT = 2**53
 
 
 def _safe_local_value(v) -> bool:
     if not isinstance(v, _LOCAL_SAFE_TYPES):
         return False
-    import math
-
-    return not (isinstance(v, float) and math.isnan(v))
+    if isinstance(v, float):
+        return not math.isnan(v)
+    return not (isinstance(v, int) and abs(v) >= _FLOAT64_EXACT_INT)
 
 
 def _local_batch_df(spark, rows: list[dict], schema: str) -> DataFrame:
@@ -124,9 +137,7 @@ def _local_batch_df(spark, rows: list[dict], schema: str) -> DataFrame:
     ):
         import pandas as pd
 
-        names = [
-            f.name for f in spark.createDataFrame([], schema).schema.fields
-        ]
+        names = [f.name for f in _ddl_fields(schema)]
         # coalesce(1): a LocalTableScan otherwise parallelizes one task
         # PER ROW (capped at leaf-node parallelism), staging one file
         # per row; a JVM-local narrow coalesce makes every action over
@@ -178,10 +189,7 @@ class Table:
 
     @property
     def columns(self) -> list[str]:
-        return [
-            f.name
-            for f in self.db.spark.createDataFrame([], self.schema).schema.fields
-        ]
+        return [f.name for f in _ddl_fields(self.schema)]
 
     @property
     def df(self) -> DataFrame:
@@ -191,16 +199,7 @@ class Table:
             if glob.glob(os.path.join(self.path, "*.parquet")):
                 return self.db.spark.read.schema(self.schema).parquet(self.path)
             return self.db.spark.createDataFrame([], self.schema)
-        paths = [
-            p
-            for d in self._manifest_dirs(v)
-            if glob.glob(os.path.join(p := os.path.join(self.path, d), "*.parquet"))
-        ]
-        if not paths:  # committed empty snapshot (e.g. delete-all)
-            return self.db.spark.createDataFrame([], self.schema)
-        # explicit schema: per-file columns resolve by name, so dirs
-        # written from differently-ordered batches read consistently
-        return self.db.spark.read.schema(self.schema).parquet(*paths)
+        return self._dirs_df(self._manifest_dirs(v))
 
     def _stage(self, df: DataFrame) -> str:
         """Write one immutable data dir; return its path relative to the
@@ -279,8 +278,10 @@ class Table:
             for d in dirs
             if glob.glob(os.path.join(p := os.path.join(self.path, d), "*.parquet"))
         ]
-        if not paths:
+        if not paths:  # empty table, or an empty snapshot (delete-all)
             return self.db.spark.createDataFrame([], self.schema)
+        # explicit schema: per-file columns resolve by name, so dirs
+        # written from differently-ordered batches read consistently
         return self.db.spark.read.schema(self.schema).parquet(*paths)
 
     def _write(self, df: DataFrame, base_version: int | None = None) -> None:
@@ -434,13 +435,10 @@ class Table:
         """Additive evolution: rows inserted before this read NULL for
         the new column (the reference's missing-BSON-field semantics)."""
         self._no_txn("add_column")
-        fields = list(
-            self.db.spark.createDataFrame([], self.schema).schema.fields
-        )
+        fields = _ddl_fields(self.schema)
         if any(f.name == column for f in fields):
             raise ValueError(f"{self.name}.{column} already exists")
-        new = self.db.spark.createDataFrame([], f"{column} {dtype}").schema.fields
-        self._set_schema(fields + list(new))
+        self._set_schema(fields + _ddl_fields(f"{column} {dtype}"))
 
     def drop_column(self, column: str) -> None:
         """Projection-only drop: the bytes stay in old data dirs, new
@@ -459,9 +457,7 @@ class Table:
             raise ValueError(
                 f"{self.name}.{column} is referenced by an FK/unique/index"
             )
-        fields = list(
-            self.db.spark.createDataFrame([], self.schema).schema.fields
-        )
+        fields = _ddl_fields(self.schema)
         if not any(f.name == column for f in fields):
             raise KeyError(f"{self.name}: no column {column!r}")
         self._set_schema([f for f in fields if f.name != column])
@@ -474,14 +470,7 @@ class Table:
         path = os.path.join(self._txn_dir(), f"{version}.json")
         if not os.path.exists(path):
             raise ValueError(f"{self.name}: no committed version {version}")
-        paths = [
-            p
-            for d in self._manifest_dirs(version)
-            if glob.glob(os.path.join(p := os.path.join(self.path, d), "*.parquet"))
-        ]
-        if not paths:
-            return self.db.spark.createDataFrame([], self.schema)
-        return self.db.spark.read.schema(self.schema).parquet(*paths)
+        return self._dirs_df(self._manifest_dirs(version))
 
     def history(self) -> list[dict]:
         """Commit log listing: [{'version': N, 'n_dirs': k}, ...] newest

@@ -93,11 +93,9 @@ def evidence(rounds: dict[int, dict]) -> dict[str, tuple[int, bool]]:
 EVIDENCE_AGE_LIMIT = 3
 SLOTS = 50
 RETIREMENT_CANDIDATES: tuple[str, ...] = (
-    # r14's incoming registration is already staged and parity-gated:
-    # operators/staged_r14.py::corpus_token_budget_select
-    # (tests/test_staged_r14.py) — registering it consumes
-    # RETIREMENT_CANDIDATES[0] below, exactly as r13 consumed
-    # text_ngram_lm_score for dedup_substring_suffix.
+    # A new registration consumes RETIREMENT_CANDIDATES[0] below,
+    # exactly as r13 consumed text_ngram_lm_score for
+    # dedup_substring_suffix.
     #
     # CONSUMED r13: text_ngram_lm_score (bigram variant of
     # lm.ngram_lm_score) retired to seat dedup_substring_suffix —

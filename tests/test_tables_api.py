@@ -650,6 +650,17 @@ def test_local_batch_df_routes_safe_rows_to_localrelation(db, spark):
     assert len(files) == 1, files
 
 
+def test_insert_keeps_big_int_next_to_null_exact(db):
+    """A bigint column holding a None and a value past float64's exact
+    range (2**53) must read back value-exact, not rounded through
+    pandas float64."""
+    big = 2**53 + 1
+    t = db.tables("big_ints", "id bigint, n bigint")
+    t.insert([{"id": 1, "n": big}, {"id": 2, "n": None}])
+    got = {r["id"]: r["n"] for r in t.df.collect()}
+    assert got == {1: big, 2: None}
+
+
 def test_leaf_cascade_census_rides_parent_count(db, monkeypatch):
     """r14: a cascading delete's recursion must hand each child the
     affected count the parent's census union already measured, so a

@@ -1,8 +1,9 @@
 """Benchmark harness: runs the engine's headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line (kept under the
-driver's 2000-char stdout tail window — the FULL per-query map is
-written to BENCH_full_local.json, digest-linked to the stdout line).
+local[$SPARK_GRAFT_CPUS] and prints ONE JSON line describing THIS run
+(kept under the driver's 2000-char stdout tail window — the FULL
+per-query map of the same run is written to BENCH_full_local.json,
+digest-linked to the stdout line).
 
 Each query is forced by CONSUMING EVERY OUTPUT COLUMN (md5 over the
 string-cast row, max-aggregated — nothing is collected to the driver
@@ -44,7 +45,6 @@ HEADLINE = [
     "semi_join_exists",
     "set_union",
     "sort_limit_offset",
-    # later phases (skipped automatically if not yet registered)
     "iot_effective_value",
     "ts_locf_merge",
     "ts_resample_interp",
@@ -170,11 +170,9 @@ class StealSampler:
     CPU for 5-25 s windows (SCALE_r13.md #4a) — enough to inflate a
     full-roster pass by 30%+ with no code change. Recording each
     pass's steal profile alongside its timings makes the ambient
-    factor part of the artifact instead of a post-hoc control: a raw
-    total is only comparable when its `steal.gt1pct` is ~0. The
-    profile goes to BENCH_last_run_local.json only — NEVER into the
-    min-merged record, whose per-query minima are by construction the
-    quietest observed windows.
+    factor part of the artifact and the stdout line instead of a
+    post-hoc control: a raw total is only comparable when its
+    `steal.gt1pct` is ~0.
 
     No-op (profile reports zero samples) where /proc/stat is absent.
     """
@@ -241,6 +239,18 @@ class StealSampler:
         }
 
 
+OUT_DIR = Path(__file__).resolve().parent
+
+
+def record_name(sf, only: bool) -> str:
+    """Artifact file for a run: the canonical sf0.1 record, a per-sf
+    record for scale runs, or the subset file for a focused
+    SPARK_GRAFT_ONLY probe (which must not clobber a full-run record)."""
+    if only:
+        return "BENCH_subset_local.json"
+    return "BENCH_full_local.json" if sf == 0.1 else f"BENCH_full_local_sf{sf}.json"
+
+
 def main() -> None:
     steal = StealSampler().start()
     spark = get_spark("iot_database_spark_bench")
@@ -285,210 +295,25 @@ def main() -> None:
     except Exception:
         pass  # sweeping is best-effort; timings are already recorded
 
-    total = round(sum(timings.values()), 4)
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # Round 5's one-line output outgrew the driver's stdout capture,
-    # which keeps only the LAST 2000 characters (BENCH_r05.json recorded
-    # parsed:null with the line's head cut off). A full per-query map
-    # over 74 names cannot fit that window, so: the full-precision
-    # record goes to BENCH_full_local.json (committed each round, tied
-    # to the stdout line by a digest), and the stdout line itself stays
-    # under _STDOUT_BUDGET bytes — totals, digest, artifact pointer,
-    # plus as many of the SLOWEST per-query entries as fit (slowest
-    # first because those are the ones a reader of the parsed line
-    # needs; the artifact has everything).
+    # The driver keeps only the LAST 2000 characters of stdout
+    # (BENCH_r05.json parsed as null with its head cut off), so the
+    # full-precision record of this run goes to the record file and
+    # stdout gets compact_line's digest-linked summary of the same run.
     full = {
         "metric": "headline_queries_total_runtime",
-        "value": total,
+        "value": round(sum(timings.values()), 4),
         "unit": "sec",
         "queries": timings,
         "sf": sf_val,
         "n_queries": len(timings),
+        "cpus": spark.sparkContext.defaultParallelism,
+        "steal": steal.stop(),
     }
-    # A focused SPARK_GRAFT_ONLY scale probe must not clobber the
-    # committed full-run record (r6 advice): partial subsets go to a
-    # separate artifact.
-    fname = "BENCH_subset_local.json" if only else "BENCH_full_local.json"
-    full_path = Path(__file__).resolve().parent / fname
-    if not only:
-        # The committed record is the per-query quiet-host BASELINE
-        # regression detection diffs against — one loaded-host run
-        # (e.g. the driver's own per-round invocation) must not erase
-        # it (r8 verdict #2: an 81.5 s loaded run clobbered the 62.8 s
-        # record). MIN-merge into the existing record; raw pass times
-        # always go to BENCH_last_run_local.json for freshness. A full
-        # run at a DIFFERENT sf (scale probes) keeps its own per-sf
-        # record file instead of displacing the canonical sf0.1 one.
-        (full_path.parent / "BENCH_last_run_local.json").write_text(
-            json.dumps({**full, "steal": steal.stop()}, indent=1) + "\n"
-        )
-        existing = _load_record(full_path)
-        if existing and existing.get("sf") != full["sf"]:
-            full_path = full_path.parent / f"BENCH_full_local_sf{full['sf']}.json"
-            existing = _load_record(full_path)
-        reset = {
-            n.strip()
-            for n in os.environ.get("SPARK_GRAFT_RESET", "").split(",")
-            if n.strip()
-        }
-        # auto-reset: a merged query whose defining module changed since
-        # the record was taken keeps a minimum measured on code that no
-        # longer exists (r9 advice: nothing derived the reset set from
-        # the actual diff — forgetting SPARK_GRAFT_RESET silently
-        # preserved a phantom baseline; r10 advice: the diff is against
-        # stamped CONTENT hashes, not HEAD, so dirty-tree and untracked
-        # defining modules reset correctly too)
-        auto = stale_from_record(existing, qs, names)
-        if auto - reset:
-            print(
-                "bench: auto-reset (module changed since record commit): "
-                + ",".join(sorted(auto - reset)),
-                file=sys.stderr,
-            )
-        full["commit"] = _git_head()  # provenance only — staleness keys
-        full["module_hashes"] = _module_hashes(qs, names)  # off content
-        full = merge_record(existing, full, reset | auto)
+    full_path = OUT_DIR / record_name(sf_val, bool(only))
     full_path.write_text(json.dumps(full, indent=1) + "\n")
     print(compact_line(full, full_path.name))
-
-
-def _load_record(path: Path) -> dict | None:
-    try:
-        return json.loads(path.read_text())
-    except (OSError, ValueError):
-        return None
-
-
-def _git_head() -> str | None:
-    import subprocess
-
-    try:
-        out = subprocess.run(
-            ["git", "rev-parse", "HEAD"],
-            cwd=Path(__file__).resolve().parent,
-            capture_output=True,
-            text=True,
-            timeout=30,
-        )
-        return out.stdout.strip() or None if out.returncode == 0 else None
-    except Exception:
-        return None
-
-
-def _defining_rel(fn) -> str | None:
-    """Repo-relative path of a query callable's defining module."""
-    code = getattr(fn, "__code__", None)
-    fname = getattr(code, "co_filename", None)
-    if not fname:
-        return None
-    return os.path.relpath(fname, Path(__file__).resolve().parent)
-
-
-def _module_hashes(qs: dict, names: list) -> dict[str, str]:
-    """sha1 of each defining module's CURRENT on-disk content, one entry
-    per distinct file. Content hashes — not a git HEAD stamp — because a
-    record can legitimately be taken from a dirty or untracked working
-    tree (r10 advice: a HEAD stamp on such a record pins a minimum to
-    code `git diff --name-only <commit>` can never see changing, the
-    exact phantom baseline the stamp exists to prevent)."""
-    import hashlib
-
-    root = Path(__file__).resolve().parent
-    out: dict[str, str] = {}
-    for name in names:
-        rel = _defining_rel(qs.get(name))
-        if rel is None or rel in out:
-            continue
-        try:
-            out[rel] = hashlib.sha1((root / rel).read_bytes()).hexdigest()
-        except OSError:
-            pass  # module not on disk (REPL-defined): never stamped
-    return out
-
-
-def stale_from_record(old_record: dict | None, qs: dict, names: list) -> set:
-    """Queries whose DEFINING module content changed since the record —
-    their recorded minima describe code that no longer exists, so
-    merge_record must take the fresh time. Prefers the record's
-    'module_hashes' content stamp (covers dirty-tree and untracked
-    edits); records from before content stamping fall back to the
-    commit diff, and records from before any stamping merge as before.
-    Defining-file granularity only: a change to a shared library module
-    a query calls into is not caught (SPARK_GRAFT_RESET remains the
-    explicit override for those)."""
-    old_record = old_record or {}
-    old_hashes = old_record.get("module_hashes")
-    if old_hashes is not None:
-        cur = _module_hashes(qs, names)
-        out = set()
-        for name in names:
-            rel = _defining_rel(qs.get(name))
-            if rel is not None and cur.get(rel) != old_hashes.get(rel):
-                out.add(name)
-        return out
-    return stale_queries(old_record.get("commit"), qs, names)
-
-
-def stale_queries(old_commit: str | None, qs: dict, names: list) -> set:
-    """Legacy commit-stamp staleness (records written before
-    'module_hashes' existed): queries whose defining module file changed
-    in COMMITTED history since the record's stamped commit. Blind to
-    dirty-tree and untracked edits — which is why new records carry
-    content hashes instead (stale_from_record)."""
-    import subprocess
-
-    if not old_commit:
-        return set()
-    root = Path(__file__).resolve().parent
-    try:
-        diff = subprocess.run(
-            ["git", "diff", "--name-only", old_commit, "--"],
-            cwd=root,
-            capture_output=True,
-            text=True,
-            timeout=30,
-        )
-        if diff.returncode != 0:
-            return set()  # unknown commit (rebase/gc): keep old behavior
-        changed = {ln.strip() for ln in diff.stdout.splitlines() if ln.strip()}
-    except Exception:
-        return set()
-    out = set()
-    for name in names:
-        code = getattr(qs.get(name), "__code__", None)
-        fname = getattr(code, "co_filename", None)
-        if fname and os.path.relpath(fname, root) in changed:
-            out.add(name)
-    return out
-
-
-def merge_record(old: dict | None, new: dict, reset: set | None = None) -> dict:
-    """Per-query min-merge of a fresh full run into the committed
-    record. Same-sf only; queries no longer in the fresh run's headline
-    set drop (retirements must not linger as phantom baseline entries);
-    queries new to this run enter at their fresh time.
-
-    `reset` (or comma-separated $SPARK_GRAFT_RESET at the CLI): queries
-    whose IMPLEMENTATION changed since the record was taken — their old
-    minima describe code that no longer exists, so they take the fresh
-    time instead of the min (min-merge is only honest while the code
-    under the old number is the code being measured)."""
-    if not old or old.get("sf") != new.get("sf"):
-        return new
-    reset = reset or set()
-    oldq = old.get("queries") or {}
-    merged = {
-        name: t
-        if name in reset or name not in oldq
-        else min(t, oldq[name])
-        for name, t in new["queries"].items()
-    }
-    out = dict(new)
-    out["queries"] = merged
-    out["value"] = round(sum(merged.values()), 4)
-    out["n_queries"] = len(merged)
-    return out
 
 
 STDOUT_BUDGET = 1900  # < the driver's 2000-char stdout tail window
@@ -496,8 +321,10 @@ STDOUT_BUDGET = 1900  # < the driver's 2000-char stdout tail window
 
 def compact_line(full: dict, queries_file: str) -> str:
     """The <=STDOUT_BUDGET-byte stdout form of a full bench record:
-    totals + digest + artifact pointer + the slowest per-query entries
-    that fit (tested in tests/test_bench_output.py)."""
+    totals, cpus, steal profile, digest, artifact pointer, and the
+    slowest per-query entries that fit — slowest first, since those are
+    the ones a reader of the parsed line needs (tested in
+    tests/test_bench_output.py)."""
     import hashlib
 
     digest = hashlib.md5(
@@ -509,6 +336,8 @@ def compact_line(full: dict, queries_file: str) -> str:
         "unit": full["unit"],
         "sf": full["sf"],
         "n_queries": full["n_queries"],
+        "cpus": full["cpus"],
+        "steal": full["steal"],
         "digest": digest,
         "queries_file": queries_file,
         "queries": {},

@@ -30,7 +30,6 @@ marker); unseen characters remain single-character tokens.
 
 from __future__ import annotations
 
-import os
 import threading
 
 from pyspark.sql import DataFrame, functions as F
@@ -180,8 +179,7 @@ _BROADCAST_MAX_WORDS = 1_000_000
 # depend on CALL ORDER — any other vocab consumer running between a
 # query's warm-up and timed pass evicted its vocab, and the timed pass
 # re-shuffled the corpus. Two slots cover the alternating-consumer
-# pattern; SPARK_GRAFT_BPE_VOCAB_SLOTS overrides for workloads cycling
-# through more tokenizers.
+# pattern.
 #
 # PLAN-IN-FLIGHT ASSUMPTION (r7 advice, now per-slot): the deferred
 # release is correct only when a plan is materialized before
@@ -190,9 +188,7 @@ _BROADCAST_MAX_WORDS = 1_000_000
 # recompute its vocab (correctness is unaffected — unpersist never
 # changes results — only the cached scan is lost); such callers should
 # call release_vocab_cache() after each materialization instead.
-_VOCAB_CACHE_SLOTS = max(
-    1, int(os.environ.get("SPARK_GRAFT_BPE_VOCAB_SLOTS", "2") or 2)
-)
+_VOCAB_CACHE_SLOTS = 2
 _LAST_PERSISTED: list = []
 _LAST_PERSISTED_LOCK = threading.Lock()
 

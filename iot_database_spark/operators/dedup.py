@@ -28,8 +28,6 @@ scan or a keyed shuffle — nothing driver-side.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -37,28 +35,17 @@ from iot_database_spark.operators.hashing import hash64, xor_permute
 
 
 def _materialize_mode(master: str | None) -> str:
-    """Resolve the heavy-stream materialization strategy (r12 verdict
-    task #4 — the r11 design hard-coded localCheckpoint, which is a
-    job-failing liability on executor loss in a multi-executor fleet).
-
-    SPARK_GRAFT_MATERIALIZE pins it explicitly:
-      local    — localCheckpoint (fastest; blocks die with an executor)
-      reliable — checkpoint() to the reliable checkpoint dir
-      persist2 — persist(MEMORY_AND_DISK_2), eager (replicated blocks)
-    Default ("auto", read at CALL time): local[*] masters — where every
-    "executor" is a thread in the one JVM and executor loss means the
-    whole job is gone anyway — keep localCheckpoint; any other master
-    gets persist2, so a cluster deployment is recompute-safe without
-    editing the module."""
-    mode = (os.environ.get("SPARK_GRAFT_MATERIALIZE") or "auto").lower()
-    if mode == "auto":
-        return "local" if (master or "").startswith("local") else "persist2"
-    if mode not in ("local", "reliable", "persist2"):
-        raise ValueError(
-            f"SPARK_GRAFT_MATERIALIZE={mode!r}: expected "
-            "local | reliable | persist2 (or unset for auto)"
-        )
-    return mode
+    """The heavy-stream materialization strategy for a Spark master
+    (r12 verdict task #4 — the r11 design hard-coded localCheckpoint,
+    which is a job-failing liability on executor loss in a
+    multi-executor fleet):
+      local    — localCheckpoint, on local[*] masters, where every
+                 "executor" is a thread in the one JVM and executor
+                 loss means the whole job is gone anyway;
+      persist2 — persist(MEMORY_AND_DISK_2), eager (replicated blocks),
+                 on any other master, so a cluster deployment is
+                 recompute-safe."""
+    return "local" if (master or "").startswith("local") else "persist2"
 
 
 def _materialize_once(df: DataFrame) -> DataFrame:
@@ -66,29 +53,18 @@ def _materialize_once(df: DataFrame) -> DataFrame:
     downstream consumer reads stored blocks instead of re-running the
     explode (the exact recompute that sank the r11 groupBy+join-back
     A/B: 2 Generates, 5 Exchanges). The stream is shuffle-input-sized
-    scratch data, so the default strategy on local masters is
-    localCheckpoint — written node-locally with no network hop, freed
-    by the ContextCleaner when the returned frame is GC'd. On any
-    non-local master the default switches to replicated persist, and
-    SPARK_GRAFT_MATERIALIZE overrides either way (_materialize_mode):
-    the plan shape downstream is identical across strategies, only the
+    scratch data, so on local masters it is localCheckpoint'ed —
+    written node-locally with no network hop, freed by the
+    ContextCleaner when the returned frame is GC'd. On any non-local
+    master it is replicated-persisted (_materialize_mode): the plan
+    shape downstream is identical across strategies, only the
     executor-loss story differs."""
-    spark = df.sparkSession
-    mode = _materialize_mode(spark.sparkContext.master)
-    if mode == "local":
+    if _materialize_mode(df.sparkSession.sparkContext.master) == "local":
         return df.localCheckpoint(eager=True)
-    if mode == "reliable":
-        sc = spark.sparkContext
-        if sc.getCheckpointDir() is None:
-            wh = spark.conf.get(
-                "spark.sql.warehouse.dir", "spark-warehouse"
-            )
-            sc.setCheckpointDir(f"{wh}/_span_checkpoints")
-        return df.checkpoint(eager=True)
     from pyspark import StorageLevel
 
     out = df.persist(StorageLevel.MEMORY_AND_DISK_2)
-    out.count()  # eager, mirroring the checkpoint modes
+    out.count()  # eager, like localCheckpoint(eager=True)
     return out
 
 

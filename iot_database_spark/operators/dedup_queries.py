@@ -55,14 +55,10 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Materialization-strategy helpers — moved to operators/dedup.py in r13
-# so the library-level pair generators (jaccard_pairs) can use them
-# without a circular import; re-exported here because the span family
-# and its tests address them via this module.
-from iot_database_spark.operators.dedup import (  # noqa: E402,F401
-    _materialize_mode,
-    _materialize_once,
-)
+# The materialization helper lives in operators/dedup.py so the
+# library-level pair generators (jaccard_pairs) can use it without a
+# circular import.
+from iot_database_spark.operators.dedup import _materialize_once  # noqa: E402
 
 
 @register(
@@ -563,7 +559,7 @@ _DECON_LEAK_ORACLE = f"""{_DECON_MH_SCORED}
 def _sig_table(docs: DataFrame, *metrics) -> tuple:
     """(id, sig array<bigint>, buckets array<string>) — ONE row per doc,
     the corpus minhash banding computed EXACTLY ONCE and materialized
-    (mode-routed like the span streams — _materialize_once), plus the
+    (master-routed like the span streams — _materialize_once), plus the
     gating scalars observed DURING the materialization job.
 
     Why materialize (r13, guide §2.4/§8): the decontamination plans had

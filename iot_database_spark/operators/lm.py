@@ -37,8 +37,6 @@ for unseen grams instead of dropping them.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -71,25 +69,12 @@ __all__ = ["ngram_lm_counts", "ngram_lm_score"]
 # Above the gate (or when the source can't be statted cheaply:
 # in-memory frames, object stores) the sort-merge plan stands — at
 # 100 TB the model is billions of rows and the shuffle is the right
-# call. SPARK_GRAFT_LM_BROADCAST overrides (A/B + deployment pin):
-# truthy/falsy spellings are normalized and anything unrecognized
-# falls back to the measured gate instead of silently forcing a
-# strategy (=off must not mean "on").
+# call.
 _BROADCAST_MODEL_MAX_SOURCE_BYTES = 4 << 30
 _BROADCAST_MODEL_MAX_SOURCE_BYTES_UNPRUNED = 128 << 20
-_ENV_TRUTHY = frozenset({"1", "true", "yes", "on"})
-_ENV_FALSY = frozenset({"0", "false", "no", "off", ""})
 
 
 def _broadcast_model(df: DataFrame, min_count: int = 1) -> bool:
-    env = os.environ.get("SPARK_GRAFT_LM_BROADCAST")
-    if env is not None:
-        val = env.strip().lower()
-        if val in _ENV_TRUTHY:
-            return True
-        if val in _ENV_FALSY:
-            return False
-        # unrecognized spelling: ignore the pin, use the measured gate
     from iot_database_spark.session import source_bytes
 
     total = source_bytes(df)

@@ -18,7 +18,6 @@ on duplicate timestamps are engine-nondeterministic.
 
 from __future__ import annotations
 
-import os
 import uuid
 import weakref
 
@@ -64,7 +63,7 @@ _ROCKSDB_PROVIDER = (
 #   - big sources: RocksDB wins big over HDFS-map, and the partition
 #     count should GROW with state size — both ends re-measured on a
 #     QUIET host in r12 (the r11 batches ran under ~10x load spikes;
-#     scripts/probe_stream_state.py, SCALE_r12.md):
+#     SCALE_r12.md):
 #       sf1  (events ~16 MB):  rocksdb-19 family 19.2 s vs rocksdb-32
 #         31.4 s (threshold alerts 6.2 vs 11.5 s) — near-empty stores
 #         still punish extra partitions;
@@ -82,23 +81,18 @@ _ROCKSDB_PROVIDER = (
 #     small-state config at every scale (watermark-evicted state never
 #     grows with the source; quiet-host sf10 hdfs-8 = 7.7 s vs
 #     21.5-37.1 s under every RocksDB config).
-# SPARK_GRAFT_STREAM_STATE_{PROVIDER,PARTITIONS} override both (the A/B
-# reproduction knobs; a deployment pins its own measured optimum).
+# The huge tier's partition count is the session's defaultParallelism
+# ("state parallelism should match compute parallelism" is the measured
+# conclusion; a literal 32 would pin one host's core count onto any
+# other deployment).
 _BIG_STATE_SOURCE_BYTES = 8 << 20
 _BIG_STATE_PARTITIONS = 19
 _HUGE_STATE_SOURCE_BYTES = 64 << 20
-# Fallback for the huge tier when the caller can't supply the session's
-# parallelism (the measured optimum on the 32-core bench host). The live
-# route derives the tier from spark.sparkContext.defaultParallelism
-# instead — "state parallelism should match compute parallelism" is the
-# measured conclusion, and a literal 32 would pin this host's core count
-# onto any other deployment (r12 advice).
-_HUGE_STATE_PARTITIONS = 32
 
 
 def _source_bytes(sf_dir: str, glob: str) -> int:
     """Total bytes of the table the stream will read (parquet file or
-    dir). Local-fs only — remote deployments set the env pins instead."""
+    dir). Local-fs only; an unreadable source counts as 0 bytes."""
     import pathlib
 
     try:
@@ -111,29 +105,16 @@ def _source_bytes(sf_dir: str, glob: str) -> int:
 
 
 def _stream_state_config(
-    sf_dir: str | None, glob: str, parallelism: int | None = None
+    sf_dir: str | None, glob: str, parallelism: int
 ) -> tuple[str, int]:
-    """(provider, partitions) for a stream over {sf_dir}/{glob} — env
-    pins first, then the measured size crossover above. `parallelism`
-    is the session's compute parallelism (defaultParallelism); the huge
-    tier tracks it (never below the big tier's count) so a deployment
-    with a different core count isn't pinned to this bench host's 32."""
-    env_prov = os.environ.get("SPARK_GRAFT_STREAM_STATE_PROVIDER")
-    env_parts = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    if env_prov is not None or env_parts is not None:
-        return (
-            (env_prov or "").lower(),
-            int(env_parts) if env_parts else _STREAM_STATE_PARTITIONS,
-        )
+    """(provider, partitions) for a stream over {sf_dir}/{glob}, from
+    the measured size crossover above. `parallelism` is the session's
+    compute parallelism (defaultParallelism); the huge tier tracks it,
+    never below the big tier's count."""
     if sf_dir:
         nbytes = _source_bytes(sf_dir, glob)
         if nbytes >= _HUGE_STATE_SOURCE_BYTES:
-            huge = (
-                max(parallelism, _BIG_STATE_PARTITIONS)
-                if parallelism
-                else _HUGE_STATE_PARTITIONS
-            )
-            return ("rocksdb", huge)
+            return ("rocksdb", max(parallelism, _BIG_STATE_PARTITIONS))
         if nbytes >= _BIG_STATE_SOURCE_BYTES:
             return ("rocksdb", _BIG_STATE_PARTITIONS)
     return ("", _STREAM_STATE_PARTITIONS)

@@ -47,18 +47,11 @@ def get_spark(app_name: str = "iot_database_spark", master: str | None = None) -
       must not depend on host timezone.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 8)
-    # Scan-split size. The 128 MB default is right at cluster scale
-    # (data >> cores x 128 MB); on the local harness a whole scaled-up
-    # table can be smaller than cores x 128 MB, capping scan tasks at
-    # 1-2 regardless of row-group layout — scale probes export this to
-    # ~total_bytes/cores so split count matches what a cluster gets for
-    # free (SCALE_r10.md methodology; r9 verdict #2).
-    max_split = os.environ.get(
-        "SPARK_GRAFT_MAX_PARTITION_BYTES", str(128 * 1024 * 1024)
-    )
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.files.maxPartitionBytes", max_split)
+        # Spark's own 128 MB scan-split default, set explicitly because
+        # _spread_partitions reads it back from the conf
+        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -67,7 +60,10 @@ def get_spark(app_name: str = "iot_database_spark", master: str | None = None) -
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "96g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         # Static conf (must precede the first session in the JVM): the
         # generated-class cache defaults to 100 entries, but a long-lived
         # session running a 100+-query workload compiles several hundred
@@ -75,16 +71,27 @@ def get_spark(app_name: str = "iot_database_spark", master: str | None = None) -
         # hot queries re-Janino-compile on every run (measured: the r13
         # full-roster bench inflated text_bpe_token_count_fixed 1.6x vs its
         # solo floor, while any ~50-query subset ran at the floor).
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4096"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     if master or not _active_session():
         builder = builder.master(master or f"local[{cpus}]")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap sized to the host: half of MemTotal in whole GiB,
+    at least 1g (also the answer when MemTotal can't be read)."""
+    try:
+        with open(meminfo) as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    kib = int(line.split()[1])
+                    return f"{max(1, kib // (2 << 20))}g"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "1g"
 
 
 def _active_session() -> SparkSession | None:

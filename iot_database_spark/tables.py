@@ -49,7 +49,18 @@ from functools import cache
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, _parse_datatype_string
+from pyspark.sql.types import (
+    BooleanType,
+    ByteType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    ShortType,
+    StringType,
+    StructField,
+    _parse_datatype_string,
+)
 
 
 @dataclass
@@ -108,36 +119,55 @@ def _ddl_fields(ddl: str) -> tuple[StructField, ...]:
 #
 # The safe set is deliberately narrow: plain scalars whose
 # pandas/Arrow round trip is value-identical to the classic verified
-# path (None -> null in every column type). datetime (tz semantics),
-# bytes, Decimal, arrays/maps, numpy scalars, NaN floats (Arrow's
-# pandas semantics would fold NaN to null where the classic path keeps
-# NaN) and ints of magnitude >= 2**53 (pandas holds an int column that
-# also has a None as float64, which rounds them) all take the classic
-# path unchanged.
-_LOCAL_SAFE_TYPES = (str, int, float, bool, type(None))
+# path (None -> null in every column type), of the EXACT Python type the
+# classic verifier accepts for their column (pyspark compares type(v),
+# so True is not an int, 3 is not a float, 3.0 is not an int) — any other
+# value goes classic and raises the verifier's error there. datetime (tz
+# semantics), bytes, Decimal, arrays/maps, numpy scalars, NaN floats
+# (Arrow's pandas semantics would fold NaN to null where the classic
+# path keeps NaN), ints outside their column's range and ints of
+# magnitude >= 2**53 (pandas holds an int column that also has a None
+# as float64, which rounds them) all take the classic path unchanged.
+_LOCAL_SAFE_TYPES = {
+    # column type: (accepted Python type, exclusive int magnitude bound)
+    BooleanType: (bool, None),
+    ByteType: (int, 2**7),
+    ShortType: (int, 2**15),
+    IntegerType: (int, 2**31),
+    LongType: (int, 2**53),
+    FloatType: (float, None),
+    DoubleType: (float, None),
+    StringType: (str, None),
+}
 _LOCAL_MAX_ROWS = 100_000
-_FLOAT64_EXACT_INT = 2**53
 
 
-def _safe_local_value(v) -> bool:
-    if not isinstance(v, _LOCAL_SAFE_TYPES):
+def _safe_local_value(v, dtype) -> bool:
+    if v is None:
+        return True
+    py, bound = _LOCAL_SAFE_TYPES.get(type(dtype), (None, None))
+    if type(v) is not py:
         return False
-    if isinstance(v, float):
+    if py is float:
         return not math.isnan(v)
-    return not (isinstance(v, int) and abs(v) >= _FLOAT64_EXACT_INT)
+    return bound is None or -bound <= v < bound
 
 
 def _local_batch_df(spark, rows: list[dict], schema: str) -> DataFrame:
     """A DataFrame over driver-local rows — as a LocalRelation when the
     values are provably round-trip-safe, else the classic RDD path."""
+    fields = _ddl_fields(schema)
     if (
         rows
         and len(rows) <= _LOCAL_MAX_ROWS
-        and all(_safe_local_value(v) for r in rows for v in r.values())
+        and all(
+            _safe_local_value(r.get(f.name), f.dataType)
+            for r in rows
+            for f in fields
+        )
     ):
         import pandas as pd
 
-        names = [f.name for f in _ddl_fields(schema)]
         # coalesce(1): a LocalTableScan otherwise parallelizes one task
         # PER ROW (capped at leaf-node parallelism), staging one file
         # per row; a JVM-local narrow coalesce makes every action over
@@ -145,7 +175,7 @@ def _local_batch_df(spark, rows: list[dict], schema: str) -> DataFrame:
         # which every later read of a digest-lifecycle table also wins
         # from (guide §6 small-files)
         return spark.createDataFrame(
-            pd.DataFrame(rows, columns=names), schema
+            pd.DataFrame(rows, columns=[f.name for f in fields]), schema
         ).coalesce(1)
     return spark.createDataFrame(rows, schema)
 
@@ -195,9 +225,6 @@ class Table:
     def df(self) -> DataFrame:
         v = self._current_version()
         if v < 0:
-            # legacy/plain layout fallback: a bare parquet dir at `path`
-            if glob.glob(os.path.join(self.path, "*.parquet")):
-                return self.db.spark.read.schema(self.schema).parquet(self.path)
             return self.db.spark.createDataFrame([], self.schema)
         return self._dirs_df(self._manifest_dirs(v))
 
@@ -724,21 +751,16 @@ class Table:
 
     def _seq_base(self) -> int:
         """Last id handed out by this table's sequence ($sequences analog
-        — LiteDB auto-id; SysSequences.cs). Persisted in table metadata so
-        id assignment costs zero Spark jobs; tables created before the
-        sequence existed migrate via a one-time max(id) read."""
-        meta = self.db._meta["tables"][self.name]
-        seq = meta.get("seq")
-        if seq is None:
-            cur = self._dirs_df(self._base_dirs())
-            seq = cur.agg(F.max("id")).collect()[0][0] or 0
-        return int(seq)
+        — LiteDB auto-id; SysSequences.cs). Persisted in table metadata
+        (created at 0 with the table) so id assignment costs zero Spark
+        jobs."""
+        return int(self.db._meta["tables"][self.name]["seq"])
 
     def _advance_seq(self, value: int) -> None:
         """Monotone: never reuse ids, even after deleting the max row
         (matching LiteDB sequence behavior)."""
         meta = self.db._meta["tables"][self.name]
-        if value > int(meta.get("seq") or 0):
+        if value > int(meta["seq"]):
             meta["seq"] = int(value)
             self.db._save_meta()
 

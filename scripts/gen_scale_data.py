@@ -56,9 +56,8 @@ def _with_copies(df: DataFrame, copies: int) -> DataFrame:
 # on at most 2 tasks — which poisoned every per-query scaling
 # measurement (ts_cusum_drift's 9.2x "step" was the layout, not the
 # plan). 16 MB row groups give a 150 MB table ~10 independently
-# readable groups; pair with spark.sql.files.maxPartitionBytes (see
-# session.get_spark's SPARK_GRAFT_MAX_PARTITION_BYTES knob) sized so
-# splits ~ cores when probing locally.
+# readable groups, so a split size below the 128 MB
+# spark.sql.files.maxPartitionBytes scans it on ~10 tasks.
 _ROW_GROUP_BYTES = 16 * 1024 * 1024
 
 

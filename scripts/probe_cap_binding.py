@@ -28,7 +28,6 @@ host's load spikes inflate single runs.
 from __future__ import annotations
 
 import json
-import os
 import shutil
 import sys
 import time
@@ -100,7 +99,6 @@ def measure(spark, sf_dir: str) -> dict:
 
 
 def main() -> None:
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
     spark = get_spark("cap_probe")
     results = {}
     for name, hot in (("below", 3_000), ("above", 12_000)):

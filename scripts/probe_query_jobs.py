@@ -12,26 +12,15 @@ the plan does. Jobs are attributed via a per-query job group.
 
 from __future__ import annotations
 
-import os
 import sys
 import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from bench import SF_DIR, force_full_result as force  # noqa: E402
 from iot_database_spark import registry  # noqa: E402
 from iot_database_spark.session import get_spark  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def force(df) -> None:
-    from pyspark.sql import functions as F
-
-    cols = [F.col(c).cast("string") for c in df.columns]
-    df.groupBy().agg(
-        F.count(F.lit(1)), F.max(F.md5(F.concat_ws("\x1f", *cols)))
-    ).collect()
 
 
 def main() -> None:

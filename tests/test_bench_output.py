@@ -21,6 +21,8 @@ def _full(n_queries: int) -> dict:
         "queries": qs,
         "sf": 0.1,
         "n_queries": n_queries,
+        "cpus": 32,
+        "steal": {"samples": 999, "gt1pct": 999, "max_pct": 99.9, "mean_pct": 99.99},
     }
 
 
@@ -29,7 +31,7 @@ def test_compact_line_fits_driver_window_at_any_size():
         line = bench.compact_line(_full(n), "BENCH_full_local.json")
         assert len(line) <= bench.STDOUT_BUDGET
         d = json.loads(line)
-        for key in ("metric", "value", "unit", "queries", "sf"):
+        for key in ("metric", "value", "unit", "queries", "sf", "cpus", "steal"):
             assert key in d
         assert d["n_queries"] == n
         # slowest queries are the ones that make the line
@@ -53,106 +55,47 @@ def test_headline_names_resolve():
     assert not missing, missing
 
 
-def test_merge_record_keeps_quiet_host_minima():
-    """r8 verdict #4: one loaded-host run must not clobber the committed
-    quiet-host per-query baselines — merge takes the per-query MIN,
-    drops retired queries, admits new ones, and recomputes the total."""
-    old = {
-        "sf": 0.1,
-        "queries": {"a": 1.0, "b": 2.0, "retired": 9.0},
-        "value": 12.0,
-        "n_queries": 3,
-        "metric": "m", "unit": "sec",
-    }
-    loaded_run = {
-        "sf": 0.1,
-        "queries": {"a": 5.0, "b": 1.5, "new": 0.5},
-        "value": 7.0,
-        "n_queries": 3,
-        "metric": "m", "unit": "sec",
-    }
-    merged = bench.merge_record(old, loaded_run)
-    assert merged["queries"] == {"a": 1.0, "b": 1.5, "new": 0.5}
-    assert merged["value"] == 3.0
-    assert merged["n_queries"] == 3
-    # different sf, or no prior record: fresh run stands as-is
-    assert bench.merge_record(None, loaded_run) is loaded_run
-    assert bench.merge_record({**old, "sf": 1.0}, loaded_run) is loaded_run
-
-
-def test_merge_record_resets_changed_queries():
-    """A query whose implementation changed takes the FRESH time, not
-    the stale min from code that no longer exists."""
-    old = {"sf": 0.1, "queries": {"a": 1.0, "b": 2.0}, "value": 3.0,
-           "n_queries": 2, "metric": "m", "unit": "sec"}
-    run = {"sf": 0.1, "queries": {"a": 1.5, "b": 1.9}, "value": 3.4,
-           "n_queries": 2, "metric": "m", "unit": "sec"}
-    merged = bench.merge_record(old, run, reset={"a"})
-    assert merged["queries"] == {"a": 1.5, "b": 1.9}
-
-
-def test_stale_queries_derive_reset_from_diff(monkeypatch):
-    """r9 advice: the min-merge reset set is derived from the actual
-    git diff against the record's stamped commit — a query whose
-    defining module changed auto-resets; unstamped records and unknown
-    commits keep the plain merge."""
-    import pathlib
-    import subprocess
+def test_bench_reports_the_run_it_measured(tmp_path, monkeypatch, capsys):
+    """r14 verdict #1/#3: stdout and the written record carry THIS
+    run's timings, stamped with cpus and the steal profile — a
+    committed record holding smaller per-query times does not leak
+    into either."""
+    import time as _t
     import types
 
-    root = pathlib.Path(bench.__file__).resolve().parent
-    changed_file = str(root / "iot_database_spark" / "operators" / "x_queries.py")
-    ns: dict = {}
-    exec(compile("def q_changed(s, d):\n    return None", changed_file, "exec"), ns)
-    exec(compile("def q_same(s, d):\n    return None", str(root / "other.py"), "exec"), ns)
-    qs = {"a": ns["q_changed"], "b": ns["q_same"]}
+    seeded = {**_full(0), "queries": {"qa": 0.0001, "qb": 0.0001}, "value": 0.0002}
+    (tmp_path / "BENCH_full_local.json").write_text(json.dumps(seeded))
+    fake_spark = types.SimpleNamespace(
+        sparkContext=types.SimpleNamespace(defaultParallelism=3)
+    )
+    monkeypatch.setattr(bench, "OUT_DIR", tmp_path)
+    monkeypatch.setattr(bench, "SF_DIR", str(tmp_path / "sf0.1"))
+    monkeypatch.setattr(bench, "HEADLINE", ["qa", "qb"])
+    monkeypatch.setattr(bench, "get_spark", lambda app: fake_spark)
+    query = lambda spark, sf_dir: None  # noqa: E731
+    monkeypatch.setattr(bench.registry, "queries", lambda: {"qa": query, "qb": query})
+    monkeypatch.setattr(bench, "force_full_result", lambda df: _t.sleep(0.01))
+    monkeypatch.delenv("SPARK_GRAFT_ONLY", raising=False)
+    bench.main()
 
-    def fake_run(cmd, **kw):
-        assert cmd[:3] == ["git", "diff", "--name-only"]
-        return types.SimpleNamespace(
-            returncode=0, stdout="iot_database_spark/operators/x_queries.py\n"
-        )
-
-    monkeypatch.setattr(subprocess, "run", fake_run)
-    assert bench.stale_queries("deadbeef", qs, ["a", "b"]) == {"a"}
-    assert bench.stale_queries(None, qs, ["a", "b"]) == set()
-
-    def fake_fail(cmd, **kw):
-        return types.SimpleNamespace(returncode=128, stdout="")
-
-    monkeypatch.setattr(subprocess, "run", fake_fail)
-    assert bench.stale_queries("gone", qs, ["a", "b"]) == set()
+    line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    rec = json.loads((tmp_path / "BENCH_full_local.json").read_text())
+    assert set(rec["queries"]) == {"qa", "qb"}
+    assert all(t >= 0.01 for t in rec["queries"].values())  # not the seeded 1e-4
+    assert rec["value"] == round(sum(rec["queries"].values()), 4)
+    assert line["queries"] == {k: round(v, 2) for k, v in rec["queries"].items()}
+    assert line["value"] == rec["value"]
+    assert line["cpus"] == rec["cpus"] == 3
+    assert line["steal"] == rec["steal"]
+    assert set(rec["steal"]) == {"samples", "gt1pct", "max_pct", "mean_pct"}
+    assert line["queries_file"] == "BENCH_full_local.json"
 
 
-def test_stale_from_record_uses_content_hashes(tmp_path, monkeypatch):
-    """r10 advice: staleness keys off stamped CONTENT hashes, so a
-    defining module edited after the record was taken resets even when
-    the edit is uncommitted or the module untracked (git-diff-blind),
-    and a record taken from a dirty tree pins the content actually
-    measured."""
-    import pathlib
-
-    root = pathlib.Path(bench.__file__).resolve().parent
-    # untracked module under the repo root — invisible to git diff
-    mod = root / "_bench_stale_probe.py"
-    mod.write_text("def q(s, d):\n    return None\n")
-    try:
-        ns: dict = {}
-        exec(compile(mod.read_text(), str(mod), "exec"), ns)
-        qs = {"a": ns["q"]}
-        stamped = bench._module_hashes(qs, ["a"])
-        assert stamped  # the probe module was hashed
-        record = {"module_hashes": stamped, "commit": "deadbeef"}
-        # unchanged content -> not stale (no git involved)
-        assert bench.stale_from_record(record, qs, ["a"]) == set()
-        # edit the file post-record (still untracked): stale now
-        mod.write_text("def q(s, d):\n    return 1\n")
-        assert bench.stale_from_record(record, qs, ["a"]) == {"a"}
-        # record predating content stamps falls back to the commit path
-        legacy = {"commit": None}
-        assert bench.stale_from_record(legacy, qs, ["a"]) == set()
-    finally:
-        mod.unlink()
+def test_record_name_per_sf_and_subset():
+    assert bench.record_name(0.1, False) == "BENCH_full_local.json"
+    assert bench.record_name(0.01, False) == "BENCH_full_local_sf0.01.json"
+    assert bench.record_name(1.0, False) == "BENCH_full_local_sf1.0.json"
+    assert bench.record_name(0.1, True) == "BENCH_subset_local.json"
 
 
 def test_steal_sampler_parses_proc_stat_line():

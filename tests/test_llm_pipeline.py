@@ -956,35 +956,17 @@ def test_ngram_lm_array_contexts_no_separator_collision(spark):
 
 
 def test_lm_broadcast_gate_routing(spark, monkeypatch, sf_dir):
-    """The scoring-join strategy gate (r11): env pin wins, then the
-    corpus-bytes stat; in-memory frames (no inputFiles) never
-    broadcast; and under the gate the executed plan actually contains
-    a broadcast join while output is identical either way."""
+    """The scoring-join strategy gate (r11): the corpus-bytes stat
+    decides; in-memory frames (no inputFiles) never broadcast; and
+    under the gate the executed plan actually contains a broadcast join
+    while output is identical either way."""
     from iot_database_spark.operators import lm
     from iot_database_spark.registry import load_views
     from pyspark.sql import functions as F
 
     docs = spark.createDataFrame([(1, "a b a")], "doc_id bigint, text string")
     # in-memory frame: no files to stat -> sort-merge default
-    monkeypatch.delenv("SPARK_GRAFT_LM_BROADCAST", raising=False)
     assert lm._broadcast_model(docs) is False
-    # env pin overrides in both directions
-    monkeypatch.setenv("SPARK_GRAFT_LM_BROADCAST", "1")
-    assert lm._broadcast_model(docs) is True
-    monkeypatch.setenv("SPARK_GRAFT_LM_BROADCAST", "0")
-    assert lm._broadcast_model(docs) is False
-    # r11 advice: falsy spellings beyond "0" must NOT force broadcast on
-    for spelling in ("False", "no", "off", " OFF "):
-        monkeypatch.setenv("SPARK_GRAFT_LM_BROADCAST", spelling)
-        assert lm._broadcast_model(docs) is False, spelling
-    for spelling in ("True", "YES", " on "):
-        monkeypatch.setenv("SPARK_GRAFT_LM_BROADCAST", spelling)
-        assert lm._broadcast_model(docs) is True, spelling
-    # unrecognized spelling falls back to the measured gate (in-memory
-    # frame -> no stat -> no broadcast), not to either forced strategy
-    monkeypatch.setenv("SPARK_GRAFT_LM_BROADCAST", "maybe")
-    assert lm._broadcast_model(docs) is False
-    monkeypatch.delenv("SPARK_GRAFT_LM_BROADCAST", raising=False)
 
     # a statted parquet corpus under the 4 GiB gate broadcasts
     tbl = load_views(spark, sf_dir)["documents"].select(
@@ -995,23 +977,22 @@ def test_lm_broadcast_gate_routing(spark, monkeypatch, sf_dir):
     # default the model is UNPRUNED (near-corpus-scale), so the byte
     # threshold drops from 4 GiB to 128 MiB — a corpus between the two
     # gates broadcasts only when pruned
-    saved = lm._BROADCAST_MODEL_MAX_SOURCE_BYTES_UNPRUNED
-    try:
-        lm._BROADCAST_MODEL_MAX_SOURCE_BYTES_UNPRUNED = 0
+    with monkeypatch.context() as m:
+        m.setattr(lm, "_BROADCAST_MODEL_MAX_SOURCE_BYTES_UNPRUNED", 0)
         assert lm._broadcast_model(tbl, min_count=2) is True
         assert lm._broadcast_model(tbl, min_count=1) is False
         assert lm._broadcast_model(tbl) is False  # default = unpruned
-    finally:
-        lm._BROADCAST_MODEL_MAX_SOURCE_BYTES_UNPRUNED = saved
     plan = lm.ngram_lm_score(tbl, min_count=2)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
 
     # identical output under both strategies (join strategy, not
-    # semantics): compare the two full result sets
-    monkeypatch.setenv("SPARK_GRAFT_LM_BROADCAST", "0")
-    smj = {(r.doc_id, r.n_ngrams, r.lm_logprob_micro)
-           for r in lm.ngram_lm_score(tbl, min_count=2).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_LM_BROADCAST", "1")
+    # semantics): a corpus over both gates keeps the sort-merge plan
+    with monkeypatch.context() as m:
+        m.setattr(lm, "_BROADCAST_MODEL_MAX_SOURCE_BYTES", -1)
+        m.setattr(lm, "_BROADCAST_MODEL_MAX_SOURCE_BYTES_UNPRUNED", -1)
+        assert lm._broadcast_model(tbl, min_count=2) is False
+        smj = {(r.doc_id, r.n_ngrams, r.lm_logprob_micro)
+               for r in lm.ngram_lm_score(tbl, min_count=2).collect()}
     bc = {(r.doc_id, r.n_ngrams, r.lm_logprob_micro)
           for r in lm.ngram_lm_score(tbl, min_count=2).collect()}
     assert smj == bc and len(smj) > 0

@@ -145,104 +145,66 @@ def test_graded_sf_block_widths_under_cap(sf):
     assert widest_label <= 4096
 
 
-def test_stream_state_config_routing(tmp_path, monkeypatch):
-    """The stream-state crossover routing (SCALE_r11.md): env pins win,
-    big sources pick RocksDB at the measured partition count, small
-    sources keep the HDFS-map/8 optimum, and a missing source falls
-    back to small-state."""
+def test_stream_state_config_routing(tmp_path):
+    """The stream-state crossover routing (SCALE_r11.md): big sources
+    pick RocksDB at the measured partition count, huge sources track
+    the session's parallelism, small sources keep the HDFS-map/8
+    optimum, and a missing source falls back to small-state."""
     from iot_database_spark.operators import streaming_queries as sq
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PROVIDER", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
-    small = tmp_path / "events.parquet"
-    small.write_bytes(b"x" * 1024)
-    assert sq._stream_state_config(str(tmp_path), "events.parquet") == (
-        "",
-        sq._STREAM_STATE_PARTITIONS,
-    )
-    big = tmp_path / "big" / "events.parquet"
-    big.mkdir(parents=True)
-    (big / "part-0.parquet").write_bytes(b"x" * (sq._BIG_STATE_SOURCE_BYTES))
-    assert sq._stream_state_config(str(tmp_path / "big"), "events.parquet") == (
-        "rocksdb",
-        sq._BIG_STATE_PARTITIONS,
-    )
+    def cfg(sub, parallelism=8, nbytes=None):
+        if nbytes is not None:  # a dir-shaped source of nbytes
+            (tmp_path / sub / "events.parquet").mkdir(parents=True)
+            (tmp_path / sub / "events.parquet" / "part-0").write_bytes(b"x" * nbytes)
+        return sq._stream_state_config(
+            str(tmp_path / sub), "events.parquet", parallelism=parallelism
+        )
+
+    (tmp_path / "events.parquet").write_bytes(b"x" * 1024)
+    assert cfg("") == ("", sq._STREAM_STATE_PARTITIONS)
+    big = sq._BIG_STATE_SOURCE_BYTES
+    assert cfg("big", nbytes=big) == ("rocksdb", sq._BIG_STATE_PARTITIONS)
     # the r12 two-tier route: past the huge threshold the partition
-    # count scales to compute parallelism (sf1 vs sf10 A/B, SCALE_r12)
-    huge = tmp_path / "huge" / "events.parquet"
-    huge.mkdir(parents=True)
-    (huge / "part-0.parquet").write_bytes(b"x" * (sq._HUGE_STATE_SOURCE_BYTES))
-    assert sq._stream_state_config(str(tmp_path / "huge"), "events.parquet") == (
-        "rocksdb",
-        sq._HUGE_STATE_PARTITIONS,
-    )
-    # the huge tier tracks the session's compute parallelism (r12
-    # advice: a literal 32 pinned this host's core count), but never
-    # drops below the big tier's measured count
-    assert sq._stream_state_config(
-        str(tmp_path / "huge"), "events.parquet", parallelism=64
-    ) == ("rocksdb", 64)
-    assert sq._stream_state_config(
-        str(tmp_path / "huge"), "events.parquet", parallelism=4
-    ) == ("rocksdb", sq._BIG_STATE_PARTITIONS)
+    # count scales to compute parallelism (sf1 vs sf10 A/B, SCALE_r12),
+    # but never drops below the big tier's measured count
+    huge = sq._HUGE_STATE_SOURCE_BYTES
+    assert cfg("huge", parallelism=32, nbytes=huge) == ("rocksdb", 32)
+    assert cfg("huge", parallelism=64) == ("rocksdb", 64)
+    assert cfg("huge", parallelism=4) == ("rocksdb", sq._BIG_STATE_PARTITIONS)
     # parallelism never changes the small/big tiers
-    assert sq._stream_state_config(
-        str(tmp_path / "big"), "events.parquet", parallelism=64
-    ) == ("rocksdb", sq._BIG_STATE_PARTITIONS)
+    assert cfg("big", parallelism=64) == ("rocksdb", sq._BIG_STATE_PARTITIONS)
+    assert cfg("", parallelism=64) == ("", sq._STREAM_STATE_PARTITIONS)
     # absent source -> small-state default, never an exception
-    assert sq._stream_state_config(str(tmp_path / "nope"), "events.parquet") == (
-        "",
-        sq._STREAM_STATE_PARTITIONS,
-    )
-    # env pins override the size routing entirely
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PROVIDER", "rocksdb")
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "19")
-    assert sq._stream_state_config(str(tmp_path), "events.parquet") == (
-        "rocksdb",
-        19,
-    )
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    assert sq._stream_state_config(str(tmp_path / "big"), "events.parquet") == (
-        "rocksdb",
-        sq._STREAM_STATE_PARTITIONS,
-    )
+    assert cfg("nope") == ("", sq._STREAM_STATE_PARTITIONS)
+    assert sq._stream_state_config(None, "x", 8) == ("", sq._STREAM_STATE_PARTITIONS)
 
 
-def test_materialize_mode_routing(monkeypatch, spark):
-    """r12 verdict task #4: the span-stream materialization strategy is
-    env-configurable with a master-aware default — localCheckpoint only
-    where executor loss already means job loss (local[*]); replicated
-    persist anywhere else; explicit pins win; garbage fails loudly."""
-    monkeypatch.delenv("SPARK_GRAFT_MATERIALIZE", raising=False)
-    assert dq._materialize_mode("local[32]") == "local"
-    assert dq._materialize_mode("local") == "local"
-    assert dq._materialize_mode("spark://host:7077") == "persist2"
-    assert dq._materialize_mode("yarn") == "persist2"
-    assert dq._materialize_mode("k8s://https://host") == "persist2"
-    assert dq._materialize_mode(None) == "persist2"
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "reliable")
-    assert dq._materialize_mode("local[32]") == "reliable"
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "PERSIST2")
-    assert dq._materialize_mode("spark://h:7077") == "persist2"
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "bogus")
-    with pytest.raises(ValueError):
-        dq._materialize_mode("local[2]")
+def test_materialize_mode_routing(spark, monkeypatch):
+    """r12 verdict task #4: the span-stream materialization strategy
+    follows the master — localCheckpoint only where executor loss
+    already means job loss (local[*]); replicated persist anywhere
+    else. Both strategies materialize the same rows."""
+    from iot_database_spark.operators import dedup
 
-    # every strategy materializes the same rows (plan shape downstream
-    # is strategy-independent); persist2 really replicates to disk-able
-    # storage, reliable really checkpoints to the reliable dir
+    for master in ("local[32]", "local"):
+        assert dedup._materialize_mode(master) == "local"
+    for master in ("spark://host:7077", "yarn", "k8s://https://host", None):
+        assert dedup._materialize_mode(master) == "persist2"
+
+    # plan shape downstream is strategy-independent; the session's own
+    # local master checkpoints, and persist2 (forced here, as a cluster
+    # master would pick it) really replicates to disk-able storage
     src = spark.range(0, 100).selectExpr("id", "id % 7 AS k")
     want = sorted((r["id"], r["k"]) for r in src.collect())
-    for mode in ("local", "persist2", "reliable"):
-        monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", mode)
-        out = dq._materialize_once(src)
-        assert sorted((r["id"], r["k"]) for r in out.collect()) == want
-        if mode == "persist2":
-            assert out.storageLevel.replication == 2
-            assert out.storageLevel.useDisk
-            out.unpersist(blocking=False)
-        if mode == "reliable":
-            assert spark.sparkContext.getCheckpointDir() is not None
+    out = dedup._materialize_once(src)
+    assert sorted((r["id"], r["k"]) for r in out.collect()) == want
+    assert "LogicalRDD" in out._jdf.queryExecution().logical().toString()
+    monkeypatch.setattr(dedup, "_materialize_mode", lambda master: "persist2")
+    out = dedup._materialize_once(src)
+    assert sorted((r["id"], r["k"]) for r in out.collect()) == want
+    assert out.storageLevel.replication == 2
+    assert out.storageLevel.useDisk
+    out.unpersist(blocking=False)
 
 
 def test_substring_suffix_variable_length_signal(spark, sf_dir):

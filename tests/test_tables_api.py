@@ -661,6 +661,23 @@ def test_insert_keeps_big_int_next_to_null_exact(db):
     assert got == {1: big, 2: None}
 
 
+@pytest.mark.parametrize(
+    "ddl, value",
+    [("bigint", 3.0), ("bigint", True), ("double", 3), ("boolean", 1), ("int", 2**31)],
+)
+def test_insert_rejects_values_the_classic_verifier_rejects(db, ddl, value):
+    """Both insert routes (Arrow LocalRelation and classic verified
+    createDataFrame) must reject a value whose Python type or range the
+    classic verifier rejects for its column, instead of the Arrow route
+    silently coercing it (3.0 -> 3, True -> 1, 3 -> 3.0, 1 -> True)."""
+    from pyspark.errors import PySparkTypeError, PySparkValueError
+
+    t = db.tables(f"parity_{ddl}_{type(value).__name__}", f"id bigint, v {ddl}")
+    with pytest.raises((PySparkTypeError, PySparkValueError)):
+        t.insert([{"id": 1, "v": value}])
+    assert t.df.count() == 0
+
+
 def test_leaf_cascade_census_rides_parent_count(db, monkeypatch):
     """r14: a cascading delete's recursion must hand each child the
     affected count the parent's census union already measured, so a
